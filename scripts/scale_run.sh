@@ -36,7 +36,6 @@ sbt -batch test > "$LOG/test.log" 2>&1
 echo "=== sbt test done rc=$? $(date +%T) ===" | tee -a "$LOG/chain.log"
 
 run linearity graft.tools.ScaleBench linearity
-run workload graft.tools.ScaleBench workload
 run ann      graft.tools.ScaleBench ann
 run decode   graft.tools.ScaleBench decode
 SPARK_GRAFT_SCALE_ROUNDS=2 run protocol graft.tools.ScaleBench protocol sf0.3

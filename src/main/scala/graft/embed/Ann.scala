@@ -139,8 +139,11 @@ object Ann {
           (gf.vec_dot(col("v"), typedLit(cvec)) / (col("norm") * lit(cnorm))).as("sim"),
           lit(-cid).as("ncid"), lit(cid).as("cid"))
       }
+      // no centroids (empty input): greatest() needs ≥ 2 arguments, and no
+      // row has a list to join — a null cid keeps the frame's schema
       val cidCol =
-        if (packed.length == 1) lit(centRows.head._1)
+        if (packed.isEmpty) lit(null).cast("int")
+        else if (packed.length == 1) lit(centRows.head._1)
         else greatest(packed.toIndexedSeq: _*).getField("cid")
       base.select(col("vec_id"), col("v"), col("norm"), cidCol.as("cid"))
     }
@@ -176,10 +179,11 @@ object Ann {
         (-(gf.vec_dot(col("qv"), typedLit(cvec)) / (col("qnorm") * lit(cnorm)))).as("nsim"),
         lit(cid).as("cid"))
     }
+    val probeCids =
+      if (csims.isEmpty) typedLit(Seq.empty[Int])
+      else slice(array_sort(array(csims.toIndexedSeq: _*)), 1, nprobe).getField("cid")
     val probes = queries
-      .select(col("query_id"), col("qv"), col("qnorm"),
-        explode(slice(array_sort(array(csims.toIndexedSeq: _*)), 1, nprobe)
-          .getField("cid")).as("cid"))
+      .select(col("query_id"), col("qv"), col("qnorm"), explode(probeCids).as("cid"))
     // the dominant queries×candidates stage pays ONE dot product per pair:
     // both norms were computed once upstream and carried here — recomputing
     // them per pair would triple the FLOPs of the re-score

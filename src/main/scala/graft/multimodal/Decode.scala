@@ -9,10 +9,8 @@ import graft.data.SyntheticImages
   * transforms over batched partitions (the Scala analog of `mapInPandas` —
   * one JVM decode loop per partition, no per-row driver round trips).
   *
-  * Image decode is REAL (javax.imageio handles png/jpeg in this JVM). Audio
-  * and video decoding libraries are not present in this environment, so
-  * those paths are deterministic STUBS (clearly marked) — the Spark-side
-  * plumbing (schema, batching, partition mapping) is real and tested.
+  * Image decode is REAL (javax.imageio handles png/jpeg in this JVM, with a
+  * FastPng path for the common PNG shape).
   */
 object Decode {
 
@@ -277,52 +275,6 @@ object Decode {
           val bos = new java.io.ByteArrayOutputStream()
           javax.imageio.ImageIO.write(out, "png", bos)
           ResizedImage(id, w, h, bos.toByteArray)
-        }
-      }
-  }
-
-  case class AudioMeta(id: String, n_samples: Long, sample_rate: Int, rms: Double)
-
-  /** STUB: no audio codec in this container. Deterministic fake decode —
-    * treats the payload as 16-bit PCM at 16 kHz. Replace the body with a
-    * real codec (e.g. javax.sound or ffmpeg bindings) in production; the
-    * partition-mapped plumbing and schema stay identical. */
-  def audioMetaStub(media: DataFrame, idCol: String = "id", bytesCol: String = "bytes"): Dataset[AudioMeta] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol), col(bytesCol)).as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          var acc = 0.0
-          var i = 0
-          while (i + 1 < bytes.length) {
-            val s = ((bytes(i) & 0xff) | (bytes(i + 1) << 8)).toShort.toDouble
-            acc += s * s
-            i += 2
-          }
-          val n = bytes.length / 2
-          AudioMeta(id, n.toLong, 16000, if (n == 0) 0.0 else math.sqrt(acc / n))
-        }
-      }
-  }
-
-  case class FrameSample(id: String, frame_idx: Int, frame_bytes: Array[Byte])
-
-  /** STUB: no video codec in this container. Deterministic fake frame
-    * sampler — slices the payload into `frames` equal chunks standing in
-    * for decoded keyframes. Real implementation would seek keyframes; the
-    * explode-to-frames schema and partition batching are the real contract. */
-  def videoFrameSampleStub(media: DataFrame, frames: Int = 4,
-      idCol: String = "id", bytesCol: String = "bytes"): Dataset[FrameSample] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol), col(bytesCol)).as[(String, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        if (bytes.isEmpty) Iterator.empty
-        else (0 until frames).iterator.map { f =>
-          val start = (bytes.length.toLong * f / frames).toInt
-          val end = (bytes.length.toLong * (f + 1) / frames).toInt
-          FrameSample(id, f, java.util.Arrays.copyOfRange(bytes, start, end))
         }
       }
   }

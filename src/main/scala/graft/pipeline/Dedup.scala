@@ -115,25 +115,23 @@ object Dedup {
     * bandedRows/cores rows — at sf0.1's 136M banded rows that is 4.25M
     * rows ≈ 200 MB of sorter pages PER TASK, all 32 tasks concurrently,
     * which brushes the execution-memory share and intermittently spills
-    * (FloorProbe: exchange+sort at 32 parts measured 6.9-20 s vs 4.2-4.6 s
-    * at 96). Deriving the width from the DATA (rows/‘rowsPerSortTask’,
-    * floored at the session default) keeps per-task sorts at a bounded
-    * ~45-70 MB at every scale — the guide §2 rule that a cluster sizes
-    * shuffle partitions to the data, not the executor count. The knob is
-    * conf-overridable for cluster tuning; partition count never affects the
-    * output set (hash partitioning by bv co-locates each bucket at any
-    * width, and everything downstream is order-insensitive).
-    * `keyedRows < 0` (unknown) keeps the session default. */
+    * (measured at sf0.1: exchange+sort at 32 parts took 6.9-20 s vs
+    * 4.2-4.6 s at 96). Deriving the width from the DATA
+    * (rows/[[RowsPerSortTask]], floored at the session default) keeps
+    * per-task sorts at a bounded ~45-70 MB at every scale — the guide §2
+    * rule that a cluster sizes shuffle partitions to the data, not the
+    * executor count. Partition count never affects the output set (hash
+    * partitioning by bv co-locates each bucket at any width, and everything
+    * downstream is order-insensitive). `keyedRows < 0` (unknown) keeps the
+    * session default. */
   private def walkPartitions(spark: org.apache.spark.sql.SparkSession,
       keyedRows: Long): Int = {
     val dflt = spark.conf.get("spark.sql.shuffle.partitions").toInt
     if (keyedRows < 0) dflt
-    else {
-      val perTask = spark.conf.getOption("graft.walk.rowsPerSortTask")
-        .map(_.toLong).getOrElse(1500000L)
-      math.min(100000L, math.max(dflt.toLong, (keyedRows + perTask - 1) / perTask)).toInt
-    }
+    else math.min(100000L, math.max(dflt.toLong,
+      (keyedRows + RowsPerSortTask - 1) / RowsPerSortTask)).toInt
   }
+  private val RowsPerSortTask = 1500000L
 
   private[graft] def saltedBucketPairs(keyed: DataFrame, maxHamming: Int,
       hotThreshold: Int, saltChunks: Int, keyedRows: Long = -1L,
@@ -148,8 +146,8 @@ object Dedup {
     // the DEDUPED pair set is checkpointed: the raw emission stream (389M
     // pairs at the 42.5M-row corpus) is ~11× the distinct set, and
     // checkpointing it cost more block I/O than the walk itself once the
-    // storage pool was under pressure — WalkStats measured the walk+count at
-    // ~136 s vs 439 s for the walk+checkpoint+distinct stage. Markers pass
+    // storage pool was under pressure — the walk+count measured ~136 s vs
+    // 439 s for the walk+checkpoint+distinct stage. Markers pass
     // through distinct unharmed (id_a = Long.MinValue never collides with a
     // real id), so hot detection still needs no extra pass. The upstream
     // re-executes only in the pathological hot case, filtered to hot buckets.
@@ -312,20 +310,6 @@ object Dedup {
   private[graft] final case class BandedRow(bv: Long, id: Long, phash: Long)
   private[graft] final case class PairRow(id_a: Long, id_b: Long)
 
-  /** dev-only walk instrumentation: per-task local longs flushed into these
-    * accumulators when the iterator exhausts (zero per-event accumulator
-    * traffic; the local adds are noise next to the bitCount they sit beside).
-    * Shipped paths pass null. */
-  private[graft] final class WalkCounters(
-      val rows: org.apache.spark.util.LongAccumulator,
-      val runs: org.apache.spark.util.LongAccumulator,
-      val subRuns: org.apache.spark.util.LongAccumulator,
-      val subSortedElems: org.apache.spark.util.LongAccumulator,
-      val subChecks: org.apache.spark.util.LongAccumulator,
-      val cursorChecks: org.apache.spark.util.LongAccumulator,
-      val emitted: org.apache.spark.util.LongAccumulator,
-      val subSortNanos: org.apache.spark.util.LongAccumulator) extends Serializable
-
   /** `firstAgreeBlocks` (r6): when > 0, the walk's bucket keys are the
     * `firstAgreeBlocks` interleaved block keys of the SAME signature carried
     * in the `phash` field (candidatesPhashBlocks; doc simhashDupPairs), and
@@ -345,7 +329,6 @@ object Dedup {
       rows: Iterator[BandedRow], maxHamming: Int, hotThreshold: Int,
       maxBufferedPairs: Int = BucketRunPairs.MaxBufferedPairs,
       markers: org.apache.spark.util.LongAccumulator = null,
-      counters: WalkCounters = null,
       firstAgreeBlocks: Int = 0)
       extends Iterator[PairRow] {
     import BucketRunPairs.SubBucketMin
@@ -370,15 +353,6 @@ object Dedup {
     private var heldBv = 0L
     private var heldId = 0L
     private var heldPh = 0L
-    // dev counters (local longs; flushed once at input end — see WalkCounters)
-    private var cRows = 0L
-    private var cRuns = 0L
-    private var cSubRuns = 0L
-    private var cSubSorted = 0L
-    private var cSubChecks = 0L
-    private var cCursorChecks = 0L
-    private var cEmitted = 0L
-    private var cSubSortNs = 0L
     private var nextPair: PairRow = _
     // run-state fields MUST be declared (and thus initialized) BEFORE the
     // constructor's advance() call below: a declaration after it would have
@@ -398,20 +372,17 @@ object Dedup {
       if (!hasHeld) {
         if (!rows.hasNext) return -1
         val r = rows.next()
-        cRows += 1
         heldBv = r.bv; heldId = r.id; heldPh = r.phash
       }
       val bv = heldBv
       curBv = bv
       ids(0) = heldId; phs(0) = heldPh
       n = 1
-      cRuns += 1
       hasHeld = false
       var overflow = false
       var done = false
       while (!done && rows.hasNext) {
         val r = rows.next()
-        cRows += 1
         if (r.bv != bv) {
           heldBv = r.bv; heldId = r.id; heldPh = r.phash; hasHeld = true; done = true
         } else if (n == cap) overflow = true
@@ -447,13 +418,11 @@ object Dedup {
           while (b < n) {
             val j = b
             b += 1
-            cCursorChecks += 1
             if (java.lang.Long.bitCount(pa ^ phs(j)) <= maxHamming &&
                 (firstAgreeBlocks == 0 ||
                   firstAgreeBlockKey(pa, phs(j)) == curBv)) {
               val x = ids(a)
               val y = ids(j)
-              cEmitted += 1
               nextPair = if (x < y) PairRow(x, y) else PairRow(y, x)
               return
             }
@@ -462,14 +431,7 @@ object Dedup {
         }
         a = 0; b = 1
         fillRun() match {
-          case -1 =>
-            if (counters != null) {
-              counters.rows.add(cRows); counters.runs.add(cRuns)
-              counters.subRuns.add(cSubRuns); counters.subSortedElems.add(cSubSorted)
-              counters.subChecks.add(cSubChecks); counters.cursorChecks.add(cCursorChecks)
-              counters.emitted.add(cEmitted); counters.subSortNanos.add(cSubSortNs)
-            }
-            nextPair = null; return
+          case -1 => nextPair = null; return
           case 1  =>
             if (markers != null) markers.add(1)
             nextPair = PairRow(Long.MinValue, markerBv); return
@@ -560,7 +522,6 @@ object Dedup {
 
     /** emit a surviving pair into the eager buffer (ids normalized). */
     private def appendPair(x: Long, y: Long): Unit = {
-      cEmitted += 1
       if (bufN == bufA.length) {
         bufA = java.util.Arrays.copyOf(bufA, bufN * 2)
         bufB = java.util.Arrays.copyOf(bufB, bufN * 2)
@@ -577,8 +538,6 @@ object Dedup {
     private def subBucketRun(): Boolean = {
       bufN = 0; bufI = 0
       val classes = maxHamming + 1
-      cSubRuns += 1
-      cSubSorted += classes.toLong * n
       // per-class per-member key: gather bits j ≡ c (mod classes). The
       // shipped config (hammingThreshold 3 ⇒ 4 classes) takes the ~12-op
       // perfect-unshuffle kernel; other class counts keep the per-bit loop.
@@ -619,9 +578,7 @@ object Dedup {
         // grouping by the full phash anyway.
         m = 0
         while (m < n) { packed(m) = (keys(off + m) << 20) | m; m += 1 }
-        val tSort = if (counters != null) System.nanoTime() else 0L
         sortPacked(packed, classes)
-        if (counters != null) cSubSortNs += System.nanoTime() - tSort
         // walk equal-key groups
         var lo = 0
         while (lo < n) {
@@ -635,7 +592,6 @@ object Dedup {
             var i2 = i1 + 1
             while (i2 < hi) {
               val mb = (packed(i2) & 0xFFFFF).toInt
-              cSubChecks += 1
               if (java.lang.Long.bitCount(pa ^ phs(mb)) <= maxHamming) {
                 // dedup: emit only at the FIRST agreeing class
                 var cc = 0
@@ -764,6 +720,10 @@ object Dedup {
       keyedRows = sigs.count() * cfg.bands)
   }
 
+  // confirm semi-filter gates 1 and 2 (see confirmIdFilter)
+  private val SemiFilterSelectivity = 4L
+  private val SemiFilterMaxIds = 8L << 20
+
   /** Pre-filter a corpus-side confirm input to the ids that actually occur
     * in the candidate pair set (guide §3.2 "reduce the big side before
     * shuffling it"). The confirm joins are inner equi-joins on id, so
@@ -774,54 +734,52 @@ object Dedup {
     * ~23k pairs vs 4.25M rows, i.e. ~99% of the tokenize+shuffle work fed
     * rows the joins discarded).
     *
-    * Adaptive gate (conf-overridable so cluster deployments retune without
-    * code changes), measured on the sf0.1 corpus both ways — a size floor
-    * on the big side (gate 0, in code below) plus:
+    * Adaptive gate, measured on the sf0.1 corpus both ways — a size floor
+    * on the big side (gate 0, in code below; the one conf-overridable
+    * threshold, `graft.confirm.semiFilterMinRows`) plus:
     *  1. SELECTIVITY pre-gate: candidate pairs must number well under the
-    *     big side's row count (`pairs · graft.confirm.semiFilterSelectivity`
-    *     ≤ bigRows, default factor 4). The dup-dense image corpus at sf0.1
-    *     (18.4M pairs over 4.25M rows) fails here instantly — engaging
+    *     big side's row count (`pairs · SemiFilterSelectivity` ≤ bigRows,
+    *     factor 4). The dup-dense image corpus at sf0.1 (18.4M pairs over
+    *     4.25M rows) fails here instantly — engaging
     *     there measured 8.6 s vs 4.3 s because the distinct-id shuffle, the
     *     broadcast build and the filtered-side checkpoint outweigh removing
     *     only ~half the corpus. The doc channels (tens of pairs over
     *     thousands of docs) and any realistically-selective 100 TB dedup
     *     pass it. Both counts are cheap: candidates are localCheckpoint-ed
     *     by every caller, and the big side is a parquet count.
-    *  2. distinct-id count ≤ `graft.confirm.semiFilterMaxIds` (default 8M
-    *     ids ≈ 150-200 MB broadcast hash relation — the guide's "few
-    *     hundred MB is fine" band); ids are localCheckpoint-ed so one
+    *  2. distinct-id count ≤ `SemiFilterMaxIds` (8M ids ≈ 150-200 MB
+    *     broadcast hash relation — the guide's "few hundred MB is fine"
+    *     band); ids are localCheckpoint-ed so one
     *     materialization feeds the gate count and both join-side
     *     broadcasts.
     * Known non-engagement: a single mega-clique (many pairs, few ids) fails
     * gate 1 even though the filter would be very selective — detecting it
     * would cost the distinct-id pass on every dense corpus, which is
     * exactly the measured regression. Returns None when a gate declines
-    * (callers keep the full-shuffle shape — output identical either way). */
+    * (callers keep the full-shuffle shape — output identical either way).
+    * `bigRows` is the big side's row count, computed once by the caller. */
+  private[graft] def confirmIdFilter(candidates: DataFrame, bigRows: Long): Option[DataFrame] = {
+    // 0. big sides below `semiFilterMinRows` aren't worth ANY gate job: the
+    //    full-corpus confirm is already sub-second there, and the gate's
+    //    count/distinct/broadcast jobs measured a net +0.2-0.3 s on the
+    //    5000-doc sf0.1 channels. One cheap count decides.
+    if (bigRows < semiFilterMinRows(candidates.sparkSession)) None
+    else if (candidates.count() * SemiFilterSelectivity > bigRows) None
+    else {
+      val ids = candidates
+        .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
+        .localCheckpoint()
+      if (ids.count() > SemiFilterMaxIds) None
+      else Some(ids)
+    }
+  }
+
   /** gate-0 floor of [[confirmIdFilter]], exposed so callers that must
     * decide whether to even materialize their candidate frame (the id pass
     * consumes it twice) can short-circuit without paying a checkpoint job
     * the declined gate would never use. */
   private[graft] def semiFilterMinRows(spark: org.apache.spark.sql.SparkSession): Long =
     spark.conf.getOption("graft.confirm.semiFilterMinRows").map(_.toLong).getOrElse(1L << 20)
-
-  private[graft] def confirmIdFilter(candidates: DataFrame, bigRows: => Long): Option[DataFrame] = {
-    val spark = candidates.sparkSession
-    def confL(key: String, dflt: Long): Long =
-      spark.conf.getOption(key).map(_.toLong).getOrElse(dflt)
-    // 0. big sides below `semiFilterMinRows` aren't worth ANY gate job: the
-    //    full-corpus confirm is already sub-second there, and the gate's
-    //    count/distinct/broadcast jobs measured a net +0.2-0.3 s on the
-    //    5000-doc sf0.1 channels. One cheap count decides.
-    if (bigRows < semiFilterMinRows(spark)) None
-    else if (candidates.count() * confL("graft.confirm.semiFilterSelectivity", 4L) > bigRows) None
-    else {
-      val ids = candidates
-        .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-        .localCheckpoint()
-      if (ids.count() > confL("graft.confirm.semiFilterMaxIds", 8L << 20)) None
-      else Some(ids)
-    }
-  }
 
   /** exact confirm of (already Hamming-filtered) candidate pairs: recheck
     * Hamming, then exact token jaccard over pre-hashed token sets.
@@ -910,8 +868,7 @@ object Dedup {
     * materialized FIRST: the salted-bucket hot path re-executes its input
     * frame filtered to hot buckets, and with signatures inline that re-run
     * repeats the entire 128-perm signature stage over the full corpus —
-    * measured 65-70 s vs 19 s at the 4.25M-row corpus (StageProbe,
-    * local[32]). One localCheckpoint of (id, phash, minhash) turns the
+    * measured 65-70 s vs 19 s at the 4.25M-row corpus (local[32]). One localCheckpoint of (id, phash, minhash) turns the
     * re-run into a cached-block filter and also cuts the walk's lineage. */
   def dupPairsMinhash(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame = {
     val banded = signatures(corpus, cfg)

@@ -122,160 +122,6 @@ object ScaleBench {
       println(s"""{"scale":"linearity","series":${series.map { case (sf, r, t) => s"""{"sf":"$sf","rows":$r,"wall_sec":$t}""" }.mkString("[", ",", "]")},"sf01_full_wall_sec":$tFull}""")
     }
 
-    if (mode == "all" || mode == "workload") {
-      beginSection()
-      import org.apache.spark.sql.functions._
-      import graft.pipeline.Dedup
-      import graft.spark.{functions => gf}
-      // Per-sf counts of the work the channel predicate FORCES on any exact
-      // engine, measured with the walk's own counters — the linearity walls
-      // above are judged against this workload, not against row count alone.
-      case class W(sf: String, rows: Long, distinctPhash: Long, eqPhashPairs: Long,
-          maxPhashOcc: Long, subSorted: Long, checks: Long, emitted: Long,
-          distinctCand: Long, confirmed: Long,
-          walkWall: Double, candWall: Double, confirmWall: Double,
-          sortCoreSec: Double)
-      val ws = Seq("sf0.1", "sf0.3", "sf1").map { sf =>
-        val s = Bench.session(32, partitions = partitionsFor(sf))
-        s.sparkContext.setLogLevel("WARN")
-        import s.implicits._
-        val corpus = SyntheticImages.ensureLite(s, s"/root/testdata/$sf")
-        val ph = corpus.groupBy("phash").agg(count(lit(1)).as("c"))
-          .agg(count(lit(1)), sum(col("c") * (col("c") - 1) / 2).cast("long"), max("c")).head()
-        val cfg = Dedup.defaultConfig
-        val sigs = Dedup.signatures(corpus)
-          .select(col("image_id"), col("phash"),
-            gf.band_keys(col("minhash"), cfg.bands, cfg.rowsPerBand).as("bands"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        sigs.count()
-        val keyed = sigs.select(
-          expr("cast(substring(image_id,5) as bigint)").as("id"), col("phash"),
-          explode(col("bands")).as("bv"))
-        // pure walk (count only, nothing materialized): the unit-cost
-        // denominator for the counters. Best-of-2 like every measured leg —
-        // single-shot walls at sf1 have swung by >100 s on this VM (a
-        // single noisy run once measured the pure walk ABOVE the candidate
-        // stage that contains it). Counters are deterministic; run 1's are
-        // kept, fresh accumulators per run.
-        def instrumentedWalk(): (Dedup.WalkCounters, Double) = {
-          val acc = s.sparkContext
-          val ctrs = new Dedup.WalkCounters(
-            acc.longAccumulator("rows"), acc.longAccumulator("runs"),
-            acc.longAccumulator("subRuns"), acc.longAccumulator("subSortedElems"),
-            acc.longAccumulator("subChecks"), acc.longAccumulator("cursorChecks"),
-            acc.longAccumulator("emitted"), acc.longAccumulator("subSortNanos"))
-          val t0 = System.nanoTime()
-          keyed.select(col("bv"), col("id"), col("phash"))
-            .repartition(col("bv")).sortWithinPartitions(col("bv"))
-            .as[Dedup.BandedRow]
-            .mapPartitions(it => new Dedup.BucketRunPairs(it, cfg.hammingThreshold,
-              1 << 20, counters = ctrs))
-            .toDF("id_a", "id_b").count()
-          (ctrs, (System.nanoTime() - t0) / 1e9)
-        }
-        val (ctrs, w1) = instrumentedWalk()
-        val walkWall = math.min(w1, instrumentedWalk()._2)
-        // the SHIPPED candidate stage (walk streamed into distinct, deduped
-        // checkpoint) for the distinct-candidate count + stage wall
-        var cand: DataFrame = null
-        def candOnce(): (Long, Double) = {
-          val t1 = System.nanoTime()
-          cand = Dedup.candidatesFromBands(sigs, cfg) // localCheckpoints eagerly
-          val n = cand.count()
-          (n, (System.nanoTime() - t1) / 1e9)
-        }
-        val persistedBefore = s.sparkContext.getPersistentRDDs.keySet
-        val (nCand, c1) = candOnce()
-        // release run 1's eagerly-checkpointed candidate blocks before run 2
-        // (and before the confirm leg): two ~41M-pair checkpointed sets at
-        // sf1 would otherwise sit in storage memory together until session
-        // stop. Only blocks created BY run 1 are dropped — sigs' checkpoint
-        // predates the snapshot and run 2 still needs it.
-        s.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => persistedBefore(id) }
-          .values.foreach(_.unpersist(blocking = true))
-        val candWall = math.min(c1, candOnce()._2)
-        val t2 = System.nanoTime()
-        val confirmed = Dedup.confirm(cand, corpus, cfg).count()
-        val confirmWall = (System.nanoTime() - t2) / 1e9
-        val rows = corpus.count()
-        s.stop()
-        W(sf, rows, ph.getLong(0), ph.getLong(1), ph.getLong(2),
-          ctrs.subSortedElems.value,
-          ctrs.subChecks.value + ctrs.cursorChecks.value, ctrs.emitted.value,
-          nCand, confirmed, walkWall, candWall, confirmWall,
-          ctrs.subSortNanos.value / 1e9)
-      }
-      out ++= "## Workload: what the predicate forces at each scale (walk counters)\n\n"
-      out ++= "Walls are best-of-2 (one-sided VM noise, same protocol as every\nmeasured leg). Counters are deterministic.\n\n"
-      out ++= "| corpus | rows | distinct pHash | equal-pHash pairs | max pHash occupancy | sub-bucket build+sort elems | forced Hamming checks | emitted pairs | distinct candidates | confirmed edges | pure walk wall (s) | in-walk sort core-time (s) | candidate stage wall (s) | confirm wall (s) |\n"
-      out ++= "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|\n"
-      ws.foreach { w =>
-        out ++= f"| ${w.sf} | ${w.rows} | ${w.distinctPhash} | ${w.eqPhashPairs} | ${w.maxPhashOcc} | ${w.subSorted} | ${w.checks} | ${w.emitted} | ${w.distinctCand} | ${w.confirmed} | ${w.walkWall}%.2f | ${w.sortCoreSec}%.2f | ${w.candWall}%.2f | ${w.confirmWall}%.2f |\n"
-      }
-      val (a, b) = (ws.head, ws.last)
-      val scale = b.rows.toDouble / a.rows
-      // full work inventory of the walk: every sub-bucket element is built
-      // (key gather) and sorted, every check is a bitCount, every emission a
-      // buffer append — these are ALL the O(·) terms the walk executes
-      def units(w: W): Long = w.subSorted + w.checks + w.emitted
-      val unitsGrowth = units(b).toDouble / units(a) / scale
-      val nsUnitA = a.walkWall * 1e9 / units(a)
-      val nsUnitB = b.walkWall * 1e9 / units(b)
-      // sort core-time is summed across tasks; compare per-element and as a
-      // share of 32-core-equivalent walk time
-      val sortNsElemA = a.sortCoreSec * 1e9 / math.max(1L, a.subSorted)
-      val sortNsElemB = b.sortCoreSec * 1e9 / math.max(1L, b.subSorted)
-      val sortShareB = b.sortCoreSec / (b.walkWall * 32)
-      out ++= f"""
-        |Reading the table:
-        |
-        |- **The corpus saturates its pHash space, the engine does not create
-        |  the work.** Distinct pHashes per row fall ${a.distinctPhash.toDouble / a.rows}%.3f →
-        |  ${b.distinctPhash.toDouble / b.rows}%.3f and equal-pHash pairs grow
-        |  ${b.eqPhashPairs.toDouble / a.eqPhashPairs}%.1f× at ${scale}%.0f× rows: the synthetic
-        |  generator draws images from ~4 continuous degrees of freedom, so past
-        |  ~10⁷ rows ever more distinct families land on identical/near pHashes.
-        |  Pairs that genuinely satisfy the channel predicate (band collision +
-        |  Hamming ≤ 3) grow super-linearly in N — an exact engine MUST examine
-        |  them. Real web-image pHash entropy does not saturate this way; this
-        |  regime is the adversarial-degeneracy bound (blank images, boilerplate
-        |  frames), not the typical one.
-        |- **Unit cost over the walk's full work inventory** (sub-bucket
-        |  build+sort elements + Hamming checks + emissions — every O(·) term
-        |  the walk executes): forced units per row grow ${unitsGrowth}%.2f×
-        |  (sf0.1 → sf1, normalized to rows); the walk spends ${nsUnitA}%.1f ns/unit
-        |  at sf0.1 and ${nsUnitB}%.1f ns/unit at sf1
-        |  (ratio ${nsUnitB / nsUnitA}%.2f×). The super-linear wall term in the
-        |  linearity series is dominated by the workload's measured growth.
-        |  units() counting each sorted element as O(1) is now exact, not an
-        |  approximation: runs past ${Dedup.BucketRunPairs.RadixMin} members
-        |  take a 2-pass LSD radix (O(n), stable, output identical to
-        |  Arrays.sort — VERDICT r3 #4), so no log-of-run-length term exists
-        |  even as max pHash occupancy grows ${a.maxPhashOcc} →
-        |  ${b.maxPhashOcc}. The in-walk sort core-time is measured directly
-        |  (column above): ${sortNsElemA}%.1f ns/sorted-elem at sf0.1 vs
-        |  ${sortNsElemB}%.1f ns/sorted-elem at sf1 (ratio
-        |  ${sortNsElemB / sortNsElemA}%.2f×), ${sortShareB * 100}%.0f%% of
-        |  32-core-equivalent walk time at sf1 — so the sort neither carries
-        |  a super-linear term nor dominates the drift. The residual per-unit
-        |  drift is attributable to the larger-than-cache working set of the
-        |  10× banded exchange (1.36B rows through one box's DRAM and storage
-        |  pool), not a candidate-volume blow-up (emitted pairs and confirmed
-        |  edges per row stay flat).
-        |- **True output stays linear** (confirmed edges per row:
-        |  ${a.confirmed.toDouble / a.rows}%.3f → ${b.confirmed.toDouble / b.rows}%.3f), so
-        |  downstream stages scale. The sf1 edge set (packed-primitive collect,
-        |  ~64 B/edge on the driver) still fits the heap-scaled local
-        |  union-find cap (Dedup.clustersLocalThreshold: ~47M edges at 24 GB);
-        |  corpora past the cap flip to the distributed label-propagation
-        |  path by design — a documented crossover, not a super-linear term.
-        |
-        |""".stripMargin
-      endSection("workload")
-      println(ws.map(w => f"""{"sf":"${w.sf}","rows":${w.rows},"sub_sorted":${w.subSorted},"checks":${w.checks},"emitted":${w.emitted},"candidates":${w.distinctCand},"confirmed":${w.confirmed},"walk_wall_sec":${w.walkWall}%.2f,"sort_core_sec":${w.sortCoreSec}%.2f,"cand_wall_sec":${w.candWall}%.2f}""").mkString("[", ",", "]"))
-    }
-
     if (mode == "all" || mode == "docskew") {
       beginSection()
       // The boilerplate-skew regime the round-3 verdict flagged for the doc

@@ -111,4 +111,11 @@ class AnnSpec extends AnyFunSuite {
     assert(r8 === 1.0, s"full probe must be exact, got $r8")
     assert(r2 > 0.15 && r2 <= r8, s"r2=$r2 r8=$r8")
   }
+
+  test("IVF on an empty embedding frame: empty result, same schema") {
+    val empty = planted.where(lit(false))
+    val got = Ann.ivfTopK(empty, 10)
+    assert(got.schema === Ann.ivfTopK(planted, 10, 8, 8, 1, col("vec_id") < 5).schema)
+    assert(got.collect().isEmpty)
+  }
 }
