@@ -52,35 +52,18 @@ object DocOps {
     * hot grams is sacrificed (documented; default keeps exactness). */
   def ngramDupPairsExact(docs: DataFrame, n: Int = 3, tau: Double = 0.6,
       maxDf: Int = Int.MaxValue): DataFrame = {
-    val (pref, gramSets) = ngramPrefixIndex(docs, n, tau, maxDf)
-    val cand0 = pref.toDF("id_a", "g")
+    val pref = ngramPrefixIndex(docs, n, tau, maxDf)
+    val cand = pref.toDF("id_a", "g")
       .join(pref.toDF("id_b", "g"), "g")
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    // r6: semi-filter the per-doc gram sets to candidate ids BEFORE the
-    // tokenize projection (guide §3.2) — the confirm joins are inner on
-    // doc_id, so non-candidate docs never influence the output; without the
-    // filter both join sides re-tokenize the full corpus. The candidate set
-    // is checkpointed only when the gate's size floor passes (the id pass +
-    // count consume it twice); under the floor the plan is exactly the r5
-    // shape plus one cheap docs.count.
-    val nDocs = docs.count()
-    val (cand, confirmSets) =
-      if (nDocs < graft.pipeline.Dedup.semiFilterMinRows(docs.sparkSession))
-        (cand0, gramSets)
-      else {
-        val c = cand0.localCheckpoint()
-        val sets = graft.pipeline.Dedup.confirmIdFilter(c, nDocs) match {
-          case Some(ids) =>
-            docs.join(broadcast(ids.select(col("id").as("doc_id"))), Seq("doc_id"), "left_semi")
-              .where(size(filter(split(col("text"), "\\s+"), t => t =!= "")) >= n)
-              .select(col("doc_id"), gf.token_ngrams(col("text"), n).as("gs"))
-              .localCheckpoint()
-          case None => gramSets
-        }
-        (c, sets)
-      }
-    cand
+    // semi-filter the docs to candidate ids before they are tokenized (guide
+    // §3.2): the confirm joins are inner on doc_id, so non-candidate docs
+    // never influence the output
+    val (cands, texts) = graft.pipeline.Dedup.restrictToCandidateIds(
+      docs.select(col("doc_id"), col("text")), "doc_id", cand, docs.count())
+    val confirmSets = gramSets(texts, n)
+    cands
       .join(confirmSets.toDF("id_a", "gs_a"), "id_a")
       .join(confirmSets.toDF("id_b", "gs_b"), "id_b")
       // coalesce: a bare `jaccard >= τ` predicate lets constraint inference
@@ -92,22 +75,24 @@ object DocOps {
       .select("id_a", "id_b")
   }
 
-  /** the n-gram channel's df-ordered prefix index `(doc_id, g)` plus the
-    * per-doc gram sets — factored out so the docscale instrument
-    * (BENCH/SCALE.md) can count the prefix join volume the SHIPPED query
-    * shuffles, without duplicating the index construction. */
+  /** per-doc sorted n-gram hash sets `(doc_id, gs)` of the docs with at
+    * least one n-gram. The emptiness guard runs BEFORE the tokenize
+    * projection as a cheap builtin predicate: `size(gs) > 0` collapsed into
+    * a Filter that re-evaluated the token_ngrams kernel per row on top of the
+    * Project's own evaluation (cross-operator subtrees get no CSE).
+    * size(token_ngrams(text, n)) > 0  ⇔  #whitespace tokens ≥ n, and both
+    * forms drop null text, so the kept row set is identical. */
+  private def gramSets(docs: DataFrame, n: Int): DataFrame = docs
+    .where(size(filter(split(col("text"), "\\s+"), t => t =!= "")) >= n)
+    .select(col("doc_id"), gf.token_ngrams(col("text"), n).as("gs"))
+
+  /** the n-gram channel's df-ordered prefix index `(doc_id, g)` — factored
+    * out so the docscale instrument (BENCH/SCALE.md) can count the prefix
+    * join volume the SHIPPED query shuffles, without duplicating the index
+    * construction. */
   private[graft] def ngramPrefixIndex(docs: DataFrame, n: Int = 3,
-      tau: Double = 0.6, maxDf: Int = Int.MaxValue): (DataFrame, DataFrame) = {
-    // the emptiness guard runs BEFORE the tokenize projection as a cheap
-    // builtin predicate: `size(gs) > 0` collapsed into a Filter that
-    // re-evaluated the token_ngrams kernel per row on top of the Project's
-    // own evaluation (cross-operator subtrees get no CSE). size(token_ngrams
-    // (text, n)) > 0  ⇔  #whitespace tokens ≥ n, and both forms drop null
-    // text, so the kept row set is identical.
-    val gramSets = docs
-      .where(size(filter(split(col("text"), "\\s+"), t => t =!= "")) >= n)
-      .select(col("doc_id"), gf.token_ngrams(col("text"), n).as("gs"))
-    val grams0 = gramSets.select(col("doc_id"), explode(col("gs")).as("g"))
+      tau: Double = 0.6, maxDf: Int = Int.MaxValue): DataFrame = {
+    val grams0 = gramSets(docs, n).select(col("doc_id"), explode(col("gs")).as("g"))
     val grams =
       if (maxDf == Int.MaxValue) grams0
       else {
@@ -120,7 +105,7 @@ object DocOps {
     // g asc — identical to the former row_number window order), and slice
     // keeps the first |d| − ⌈τ·|d|⌉ + 1. Replaces TWO window functions
     // (row_number + count) over the same per-doc sort with one agg pass.
-    val pref = grams.join(dfc, "g")
+    grams.join(dfc, "g")
       .groupBy("doc_id")
       .agg(array_sort(collect_list(struct(col("df"), col("g")))).as("ordered"))
       .select(col("doc_id"),
@@ -134,7 +119,6 @@ object DocOps {
       // never fires across the pruned copies; same lesson as
       // Dedup.dupPairsMinhash)
       .localCheckpoint()
-    (pref, gramSets)
   }
 
   /** banded MinHash LSH near-dup pairs + exact n-gram jaccard confirm.
@@ -156,17 +140,12 @@ object DocOps {
       hotThreshold: Int = 1 << 12, saltChunks: Int = 16): DataFrame = {
     val cand = minhashCandidates(docs, n, numPerm, bands, rowsPerBand,
       hotThreshold, saltChunks)
-    // r6: semi-filter the text side to candidate ids (guide §3.2) — the
-    // confirm joins are inner on doc_id, so the filter is output-identical
-    // and keeps the full corpus text out of both join shuffles
-    val base = docs.select(col("doc_id"), col("text"))
-    val texts = graft.pipeline.Dedup.confirmIdFilter(cand, docs.count()) match {
-      case Some(ids) =>
-        base.join(broadcast(ids.select(col("id").as("doc_id"))), Seq("doc_id"), "left_semi")
-          .localCheckpoint()
-      case None => base
-    }
-    cand
+    // semi-filter the text side to candidate ids (guide §3.2): the confirm
+    // joins are inner on doc_id, so the filter is output-identical and keeps
+    // the full corpus text out of both join shuffles
+    val (cands, texts) = graft.pipeline.Dedup.restrictToCandidateIds(
+      docs.select(col("doc_id"), col("text")), "doc_id", cand, docs.count())
+    cands
       .join(texts.toDF("id_a", "text_a"), "id_a")
       .join(texts.toDF("id_b", "text_b"), "id_b")
       .where(gf.ngram_jaccard(col("text_a"), col("text_b"), n) >= tau)
@@ -229,15 +208,11 @@ object DocOps {
       saltChunks, keyedRows = sigs.count() * (maxHamming + 1), // sigs checkpointed
       firstAgreeBlocks = maxHamming + 1) // keys derive from sh == the carried signature
       .toDF("id_a", "id_b")
-    // r6: semi-filter the signature side to candidate ids (inner joins on
-    // doc_id ⇒ output-identical); sigs is already checkpointed, so the
-    // filtered sides are cheap broadcast filters over cached blocks
-    val confirmSigs = graft.pipeline.Dedup.confirmIdFilter(pairs, sigs.count()) match {
-      case Some(ids) =>
-        sigs.join(broadcast(ids.select(col("id").as("doc_id"))), Seq("doc_id"), "left_semi")
-      case None => sigs
-    }
-    pairs
+    // semi-filter the signature side to candidate ids (inner joins on
+    // doc_id ⇒ output-identical)
+    val (cands, confirmSigs) = graft.pipeline.Dedup.restrictToCandidateIds(
+      sigs, "doc_id", pairs, sigs.count())
+    cands
       .join(confirmSigs.toDF("id_a", "sh_a"), "id_a")
       .join(confirmSigs.toDF("id_b", "sh_b"), "id_b")
       .select(col("id_a"), col("id_b"),

@@ -95,7 +95,14 @@ object Ann {
     * the `nprobe` nearest lists. `nprobe = centroids` degenerates to exact
     * brute force (tested), giving a tunable recall/cost dial. Centroids are
     * tiny (centroids × dim doubles) — computed distributed, collected, and
-    * broadcast back. */
+    * broadcast back.
+    *
+    * Plan-size bound: assignment and probing embed every centroid vector as
+    * a literal inside one N-ary `greatest()` / `array()` expression, so the
+    * serialized plan shipped with every task, and its generated code, grow
+    * with centroids × dim. That is small at the default 16 centroids; at
+    * large centroids × dim the generated code can pass the codegen limits
+    * and run interpreted. */
   def ivfTopK(emb: DataFrame, k: Int = 10, centroids: Int = 16, nprobe: Int = 4,
       lloydIters: Int = 2, queryFilter: Column = lit(true)): DataFrame = {
     val spark = emb.sparkSession

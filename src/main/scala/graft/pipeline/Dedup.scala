@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, Project}
 import org.apache.spark.sql.functions._
 import graft.spark.{functions => gf}
 
@@ -52,12 +53,16 @@ object Dedup {
   private[graft] def idNum(c: Column): Column = substring(c, 5, 10).cast("bigint")
   private[graft] def idStr(c: Column): Column = format_string("img_%010d", c)
 
+  /** numeric id, phash, caption: a confirm side before any per-row kernel. */
+  private def idPhashCaption(corpus: DataFrame): DataFrame =
+    corpus.select(idNum(col("image_id")).as("id"), col("phash"), col("caption"))
+
+  /** caption → sorted token-hash set `tok`, once per row. */
+  private def tokenized(rows: DataFrame): DataFrame =
+    rows.select(col("id"), col("phash"), gf.token_ngrams(col("caption"), 1).as("tok"))
+
   /** once-per-row prep: numeric id, phash, sorted token-hash set. */
-  private[pipeline] def prepared(corpus: DataFrame): DataFrame =
-    corpus.select(
-      idNum(col("image_id")).as("id"),
-      col("phash"),
-      gf.token_ngrams(col("caption"), 1).as("tok"))
+  private[pipeline] def prepared(corpus: DataFrame): DataFrame = tokenized(idPhashCaption(corpus))
 
   /** narrow per-row signature stage; input needs only (image_id, phash, caption). */
   def signatures(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame = {
@@ -73,6 +78,30 @@ object Dedup {
 
   /** number of pigeonhole blocks for the configured Hamming threshold. */
   def blocksFor(cfg: Config): Int = cfg.hammingThreshold + 1
+
+  /** Scale-adaptive partition count for the walk's wide exchange (r6).
+    * The session default (`spark.sql.shuffle.partitions` = core count in
+    * the bench sessions) leaves each in-partition bv-sort with
+    * bandedRows/cores rows — at sf0.1's 136M banded rows that is 4.25M
+    * rows ≈ 200 MB of sorter pages PER TASK, all 32 tasks concurrently,
+    * which brushes the execution-memory share and intermittently spills
+    * (measured at sf0.1: exchange+sort at 32 parts took 6.9-20 s vs
+    * 4.2-4.6 s at 96). Deriving the width from the DATA
+    * (rows/[[RowsPerSortTask]], floored at the session default) keeps
+    * per-task sorts at a bounded ~45-70 MB at every scale — the guide §2
+    * rule that a cluster sizes shuffle partitions to the data, not the
+    * executor count. Partition count never affects the output set (hash
+    * partitioning by bv co-locates each bucket at any width, and everything
+    * downstream is order-insensitive). `keyedRows < 0` (unknown) keeps the
+    * session default. */
+  private def walkPartitions(spark: org.apache.spark.sql.SparkSession,
+      keyedRows: Long): Int = {
+    val dflt = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    if (keyedRows < 0) dflt
+    else math.min(100000L, math.max(dflt.toLong,
+      (keyedRows + RowsPerSortTask - 1) / RowsPerSortTask)).toInt
+  }
+  private val RowsPerSortTask = 1500000L
 
   /** Pair generation over an LSH-keyed frame `(id, phash, bv)`.
     *
@@ -109,30 +138,6 @@ object Dedup {
     * no-op there (no signature to re-key by), so hot buckets route STRAIGHT
     * to the terminal salt-and-replicate join — output-bound fan-out across
     * `saltChunks` tasks, the StreamingDedup.SaltChunks pattern. */
-  /** Scale-adaptive partition count for the walk's wide exchange (r6).
-    * The session default (`spark.sql.shuffle.partitions` = core count in
-    * the bench sessions) leaves each in-partition bv-sort with
-    * bandedRows/cores rows — at sf0.1's 136M banded rows that is 4.25M
-    * rows ≈ 200 MB of sorter pages PER TASK, all 32 tasks concurrently,
-    * which brushes the execution-memory share and intermittently spills
-    * (measured at sf0.1: exchange+sort at 32 parts took 6.9-20 s vs
-    * 4.2-4.6 s at 96). Deriving the width from the DATA
-    * (rows/[[RowsPerSortTask]], floored at the session default) keeps
-    * per-task sorts at a bounded ~45-70 MB at every scale — the guide §2
-    * rule that a cluster sizes shuffle partitions to the data, not the
-    * executor count. Partition count never affects the output set (hash
-    * partitioning by bv co-locates each bucket at any width, and everything
-    * downstream is order-insensitive). `keyedRows < 0` (unknown) keeps the
-    * session default. */
-  private def walkPartitions(spark: org.apache.spark.sql.SparkSession,
-      keyedRows: Long): Int = {
-    val dflt = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    if (keyedRows < 0) dflt
-    else math.min(100000L, math.max(dflt.toLong,
-      (keyedRows + RowsPerSortTask - 1) / RowsPerSortTask)).toInt
-  }
-  private val RowsPerSortTask = 1500000L
-
   private[graft] def saltedBucketPairs(keyed: DataFrame, maxHamming: Int,
       hotThreshold: Int, saltChunks: Int, keyedRows: Long = -1L,
       firstAgreeBlocks: Int = 0): DataFrame = {
@@ -229,7 +234,7 @@ object Dedup {
       val fanned = if (keyed.columns.contains("bands")) denseFirstAgreeJoin(dense)
         else denseSaltedJoin(dense)
       // checkpoint: downstream confirm consumes the candidate set more than
-      // once (pair joins + the r6 semi-filter id pass + its count gate);
+      // once (pair joins + the semi-filter's pair count and id pass);
       // without materialization each consumer re-executes the dense join
       return small.union(fanned).distinct().localCheckpoint()
     }
@@ -282,6 +287,16 @@ object Dedup {
       keyedRows: Long = -1L): DataFrame =
     saltedBucketPairs(keyed, maxHamming = 64, hotThreshold, saltChunks, keyedRows)
 
+  /** primitive-field rows for the walk's encoder boundaries: scala Tuple3 is
+    * UNSPECIALIZED, so a `Dataset[(Long, Long, Long)]` decode allocates a
+    * Tuple3 plus three boxed Longs per row (4 allocations × 1.36B banded
+    * rows at the 42.5M-row corpus ≈ 130 GB of nursery churn — GC pauses
+    * alone measured 134 s of a 620 s candidate stage); a case class with
+    * primitive fields decodes and serializes as one allocation per row with
+    * no boxing. */
+  private[graft] final case class BandedRow(bv: Long, id: Long, phash: Long)
+  private[graft] final case class PairRow(id_a: Long, id_b: Long)
+
   /** Streaming walk of bv-sorted rows: buffers one bucket run at a time
     * (bounded by `hotThreshold`), emits its Hamming-filtered pairs, skips
     * singleton runs, and reports each oversized run as one MARKER pair
@@ -299,18 +314,9 @@ object Dedup {
     * full cross-product walk exactly (BucketRunPairsSpec). Large LSH buckets
     * are dominated by FALSE band collisions with near-random phashes, where
     * class groups are near-singletons: measured 3.59B raw in-bucket pairs at
-    * the 4.25M-row corpus collapse to ~collision count work. */
-  /** primitive-field rows for the walk's encoder boundaries: scala Tuple3 is
-    * UNSPECIALIZED, so a `Dataset[(Long, Long, Long)]` decode allocates a
-    * Tuple3 plus three boxed Longs per row (4 allocations × 1.36B banded
-    * rows at the 42.5M-row corpus ≈ 130 GB of nursery churn — GC pauses
-    * alone measured 134 s of a 620 s candidate stage); a case class with
-    * primitive fields decodes and serializes as one allocation per row with
-    * no boxing. */
-  private[graft] final case class BandedRow(bv: Long, id: Long, phash: Long)
-  private[graft] final case class PairRow(id_a: Long, id_b: Long)
-
-  /** `firstAgreeBlocks` (r6): when > 0, the walk's bucket keys are the
+    * the 4.25M-row corpus collapse to ~collision count work.
+    *
+    * `firstAgreeBlocks` (r6): when > 0, the walk's bucket keys are the
     * `firstAgreeBlocks` interleaved block keys of the SAME signature carried
     * in the `phash` field (candidatesPhashBlocks; doc simhashDupPairs), and
     * a pair within Hamming ≤ maxHamming shares ≥ blocks−maxHamming of them
@@ -720,66 +726,47 @@ object Dedup {
       keyedRows = sigs.count() * cfg.bands)
   }
 
-  // confirm semi-filter gates 1 and 2 (see confirmIdFilter)
+  // the confirm semi-filter's selectivity factor and broadcast id cap
   private val SemiFilterSelectivity = 4L
   private val SemiFilterMaxIds = 8L << 20
 
-  /** Pre-filter a corpus-side confirm input to the ids that actually occur
-    * in the candidate pair set (guide §3.2 "reduce the big side before
-    * shuffling it"). The confirm joins are inner equi-joins on id, so
-    * dropping rows whose id never appears in `candidates` cannot change the
-    * output — it only stops the full corpus (and the per-row tokenize that
-    * sits above it) from being shuffled into both join sides when the
-    * candidate set is orders of magnitude smaller than the corpus (at sf0.1:
-    * ~23k pairs vs 4.25M rows, i.e. ~99% of the tokenize+shuffle work fed
-    * rows the joins discarded).
+  /** Restrict a confirm side to the ids that occur in the candidate pairs
+    * (guide §3.2). Confirms join `(id_a, id_b)` to the side with inner
+    * equi-joins on `idCol`, so the filter cannot change the output; it keeps
+    * non-candidate rows out of the per-row kernels and both join shuffles.
+    * Callers apply their kernels to the returned side: Spark 4.1 pushes a
+    * left-semi join through no projection that computes a column.
     *
-    * Adaptive gate, measured on the sf0.1 corpus both ways — a size floor
-    * on the big side (gate 0, in code below; the one conf-overridable
-    * threshold, `graft.confirm.semiFilterMinRows`) plus:
-    *  1. SELECTIVITY pre-gate: candidate pairs must number well under the
-    *     big side's row count (`pairs · SemiFilterSelectivity` ≤ bigRows,
-    *     factor 4). The dup-dense image corpus at sf0.1 (18.4M pairs over
-    *     4.25M rows) fails here instantly — engaging
-    *     there measured 8.6 s vs 4.3 s because the distinct-id shuffle, the
-    *     broadcast build and the filtered-side checkpoint outweigh removing
-    *     only ~half the corpus. The doc channels (tens of pairs over
-    *     thousands of docs) and any realistically-selective 100 TB dedup
-    *     pass it. Both counts are cheap: candidates are localCheckpoint-ed
-    *     by every caller, and the big side is a parquet count.
-    *  2. distinct-id count ≤ `SemiFilterMaxIds` (8M ids ≈ 150-200 MB
-    *     broadcast hash relation — the guide's "few hundred MB is fine"
-    *     band); ids are localCheckpoint-ed so one
-    *     materialization feeds the gate count and both join-side
-    *     broadcasts.
-    * Known non-engagement: a single mega-clique (many pairs, few ids) fails
-    * gate 1 even though the filter would be very selective — detecting it
-    * would cost the distinct-id pass on every dense corpus, which is
-    * exactly the measured regression. Returns None when a gate declines
-    * (callers keep the full-shuffle shape — output identical either way).
-    * `bigRows` is the big side's row count, computed once by the caller. */
-  private[graft] def confirmIdFilter(candidates: DataFrame, bigRows: Long): Option[DataFrame] = {
-    // 0. big sides below `semiFilterMinRows` aren't worth ANY gate job: the
-    //    full-corpus confirm is already sub-second there, and the gate's
-    //    count/distinct/broadcast jobs measured a net +0.2-0.3 s on the
-    //    5000-doc sf0.1 channels. One cheap count decides.
-    if (bigRows < semiFilterMinRows(candidates.sparkSession)) None
-    else if (candidates.count() * SemiFilterSelectivity > bigRows) None
+    * The rule, measured at sf0.1 both ways: under the floor
+    * `graft.confirm.semiFilterMinRows` (default 2^20 rows) decline with no
+    * job (the filter's jobs cost +0.2-0.3 s on the 5000-doc channels);
+    * otherwise count the pairs once and engage when `4·pairs ≤ sideRows`
+    * and `2·pairs ≤ SemiFilterMaxIds`. The dup-dense image corpus (18.4M
+    * pairs over 4.25M rows) declines: engaging there took 8.6 s vs 4.3 s.
+    * Each pair adds at most two ids, so `2·pairs` bounds the distinct ids,
+    * and with them the broadcast (8M ids ≈ 150-200 MB), with no job.
+    *
+    * Returns the candidates to join and the side. Past the floor, candidates
+    * that are more than projections and filters over a leaf (a walk's
+    * checkpoint) are checkpointed once, since the count, the id pass and the
+    * joins all read them; an engaged side is checkpointed once. */
+  private[graft] def restrictToCandidateIds(side: DataFrame, idCol: String,
+      candidates: DataFrame, sideRows: Long): (DataFrame, DataFrame) = {
+    val floor = side.sparkSession.conf.getOption("graft.confirm.semiFilterMinRows")
+      .map(_.toLong).getOrElse(1L << 20)
+    if (sideRows < floor) return (candidates, side)
+    val computed = candidates.queryExecution.optimizedPlan.exists {
+      case _: Project | _: Filter | _: LeafNode => false
+      case _ => true
+    }
+    val cands = if (computed) candidates.localCheckpoint() else candidates
+    val pairs = cands.count()
+    if (pairs * SemiFilterSelectivity > sideRows || 2 * pairs > SemiFilterMaxIds) (cands, side)
     else {
-      val ids = candidates
-        .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-        .localCheckpoint()
-      if (ids.count() > SemiFilterMaxIds) None
-      else Some(ids)
+      val ids = cands.select(explode(array(col("id_a"), col("id_b"))).as(idCol)).distinct()
+      (cands, side.join(broadcast(ids), Seq(idCol), "left_semi").localCheckpoint())
     }
   }
-
-  /** gate-0 floor of [[confirmIdFilter]], exposed so callers that must
-    * decide whether to even materialize their candidate frame (the id pass
-    * consumes it twice) can short-circuit without paying a checkpoint job
-    * the declined gate would never use. */
-  private[graft] def semiFilterMinRows(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("graft.confirm.semiFilterMinRows").map(_.toLong).getOrElse(1L << 20)
 
   /** exact confirm of (already Hamming-filtered) candidate pairs: recheck
     * Hamming, then exact token jaccard over pre-hashed token sets.
@@ -789,26 +776,16 @@ object Dedup {
     * that would double the join count for no reduction.
     * Output ids formatted back to strings.
     *
-    * r6: the corpus side is semi-filtered to candidate ids FIRST (broadcast
-    * left-semi over the distinct candidate ids, [[confirmIdFilter]]), then
-    * tokenized, then localCheckpoint-ed so BOTH join sides read the one
-    * tiny materialized frame instead of two full corpus scans — the
-    * tokenize kernel and the confirm-join shuffles now run over ~candidate
-    * cardinality, not corpus cardinality. Join results are identical: the
-    * joins are inner on id and the filter only removes non-matching rows. */
+    * The corpus side is restricted to candidate ids before it is tokenized
+    * ([[restrictToCandidateIds]]), so when the filter engages the tokenize
+    * kernel and the confirm-join shuffles run over ~candidate cardinality,
+    * not corpus cardinality. */
   def confirm(candidates: DataFrame, corpus: DataFrame, cfg: Config = defaultConfig,
       corpusRows: Long = -1L): DataFrame = {
-    val rows = confirmIdFilter(candidates,
-      if (corpusRows >= 0) corpusRows else corpus.count()) match {
-      case Some(ids) =>
-        corpus
-          .select(idNum(col("image_id")).as("id"), col("phash"), col("caption"))
-          .join(broadcast(ids), Seq("id"), "left_semi")
-          .select(col("id"), col("phash"), gf.token_ngrams(col("caption"), 1).as("tok"))
-          .localCheckpoint()
-      case None => prepared(corpus)
-    }
-    candidates
+    val (cands, side) = restrictToCandidateIds(idPhashCaption(corpus), "id", candidates,
+      if (corpusRows >= 0) corpusRows else corpus.count())
+    val rows = tokenized(side)
+    cands
       // shuffle_hash: broadcast builds are single-threaded driver work and
       // sort-merge would sort the fat token arrays
       .hint("shuffle_hash").join(rows.toDF("id_a", "phash_a", "tok_a"), "id_a")
@@ -836,14 +813,9 @@ object Dedup {
     * lcs(a,b) ≥ L  ⇔  the char L-gram sets of a and b intersect. */
   def confirmSubstring(candidates: DataFrame, corpus: DataFrame,
       cfg: Config = defaultConfig, minLen: Int = 12): DataFrame = {
-    val base = corpus.select(idNum(col("image_id")).as("id"), col("phash"), col("caption"))
-    // r6: same candidate-id semi-filter as `confirm` — inner joins on id, so
-    // dropping never-joined corpus rows is output-identical
-    val rows = confirmIdFilter(candidates, corpus.count()) match {
-      case Some(ids) => base.join(broadcast(ids), Seq("id"), "left_semi").localCheckpoint()
-      case None => base
-    }
-    candidates
+    val (cands, rows) =
+      restrictToCandidateIds(idPhashCaption(corpus), "id", candidates, corpus.count())
+    cands
       .hint("shuffle_hash").join(rows.toDF("id_a", "phash_a", "cap_a"), "id_a")
       .hint("shuffle_hash").join(rows.toDF("id_b", "phash_b", "cap_b"), "id_b")
       .where(bit_count(col("phash_a").bitwiseXOR(col("phash_b"))) <= cfg.hammingThreshold)

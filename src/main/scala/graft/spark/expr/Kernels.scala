@@ -154,34 +154,6 @@ object Kernels {
     s
   }
 
-  /** L2-normalize (float or double input) → unit double vector. */
-  def vecNormalize(a: ArrayData): ArrayData = {
-    val x = a.toDoubleArray()
-    var n = 0.0
-    var i = 0
-    while (i < x.length) { n += x(i) * x(i); i += 1 }
-    val inv = if (n == 0.0) 0.0 else 1.0 / math.sqrt(n)
-    val out = new Array[Double](x.length)
-    i = 0
-    while (i < x.length) { out(i) = x(i) * inv; i += 1 }
-    doubles(out)
-  }
-
-  def vecNormalizeFloat(a: ArrayData): ArrayData = {
-    val xf = a.toFloatArray()
-    val x = new Array[Double](xf.length)
-    var i = 0
-    while (i < xf.length) { x(i) = xf(i).toDouble; i += 1 }
-    var n = 0.0
-    i = 0
-    while (i < x.length) { n += x(i) * x(i); i += 1 }
-    val inv = if (n == 0.0) 0.0 else 1.0 / math.sqrt(n)
-    val out = new Array[Double](x.length)
-    i = 0
-    while (i < x.length) { out(i) = x(i) * inv; i += 1 }
-    doubles(out)
-  }
-
   // ---- HLL scalars ----
 
   def hllFromFeatures(features: ArrayData, np: Int): Array[Byte] = {

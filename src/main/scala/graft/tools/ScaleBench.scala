@@ -287,7 +287,7 @@ object ScaleBench {
           // untimed decomposition of the same plan: prefix index size and the
           // PRE-distinct join volume — the one sub-quadratic claim that had
           // no measured growth curve
-          val (pref, _) = DocOps.ngramPrefixIndex(docs)
+          val pref = DocOps.ngramPrefixIndex(docs)
           val prefixRows = pref.count()
           // ONE pass over the self-join for both counters (the k=10 join is
           // 113M rows — building it twice doubled the untimed decomposition's
